@@ -41,8 +41,10 @@ object PlanDump {
     md.append("Generated by `sbt \"runMain graft.PlanDump\"`. Properties asserted in\n")
     md.append("`PlanShapeSpec`; this file is the human-readable dump.\n\n")
     md.append("## Fused geocode pipeline (pages -> hits)\n\n")
-    md.append("Note: zero exchanges on the pages side — two BroadcastHashJoins,\n")
-    md.append("no Sort, no Window, no Aggregate below the scan.\n\n```\n")
+    md.append("Note: zero exchanges and no join on the pages side — the forward and\n")
+    md.append("reverse lookups are broadcast once by `Pipeline.prepare` and probed by\n")
+    md.append("the two UDFs of the extraction stage; no Sort, no Window, no Aggregate\n")
+    md.append("below the scan.\n\n```\n")
     md.append(fmt(pipeline)).append("\n```\n\n")
     md.append("## Per-tile rollup (the job's only exchange)\n\n```\n")
     md.append(fmt(tiles)).append("\n```\n\n")

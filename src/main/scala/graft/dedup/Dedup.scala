@@ -383,13 +383,6 @@ object Dedup {
   def sha60(prefix: Column, s: Column): Column =
     graft.functions.TextFunctions.sha60(concat(prefix, lit(":"), s))
 
-  /** Portable MinHash signature: sig[i] = min over shingles of sha60(i, s). */
-  def portableMinhashSig(text: Column, perms: Int = 16): Column = {
-    val sh = shingleCol(text)
-    transform(sequence(lit(0), lit(perms - 1)), i =>
-      array_min(transform(sh, s => sha60(i.cast("string"), s))))
-  }
-
   /** Portable minhash signature TABLE (doc_id, sig) in the explode shape —
     * shingles spread across the cluster first, one codegen'd sha256 per
     * (shingle, perm), min with map-side combine, array re-assembled last.

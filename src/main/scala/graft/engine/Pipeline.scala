@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,11 +9,12 @@ import graft.model.{ForwardParams, ReverseParams}
 
 /**
  * The flagship end-to-end job (north_star): pages -> mention/coordinate
- * extraction -> forward geocode (name mentions x broadcast gazetteer) +
- * reverse geocode (coordinate literals x polygon PIP) -> web-mercator tile
- * assignment. One scan of pages, two broadcast joins, one union; the only
- * shuffles are the per-(url, mention) top-k window and the optional tile
- * rollup. Every output row carries text_sha256 (byte-identity invariant).
+ * extraction -> forward geocode (name mentions -> gazetteer top-1 place) +
+ * reverse geocode (coordinate literals -> polygon PIP) -> web-mercator tile
+ * assignment. The forward and reverse lookups are built on the driver at
+ * set-up (`prepare`) and broadcast once; a batch is then a single map stage
+ * (scan -> extract -> probe -> tile) plus the tile rollup, its only
+ * shuffle. Every output row carries text_sha256 (byte-identity invariant).
  *
  * Stage boundaries can checkpoint (E10) via cfg.ckptDir — each stage then
  * resumes idempotently from Parquet + lineage.
@@ -53,12 +55,13 @@ object Pipeline {
     * verb='reverse' rows resolve coordinate literals to admin polygons.
     *
     * FUSED single-pass plan (the 100 TB shape): one scan of pages ->
-    * extraction -> two broadcast LEFT joins (top-1 name index on `norm`;
-    * packed polygon cell index on `cell`) -> conditional projection -> tile
-    * assignment. The big side never shuffles, never aggregates, and is
-    * scanned exactly once; the only exchange in the whole job is the
-    * optional per-tile rollup. Skew needs no salting here because there is
-    * no shuffle key at all — hot cells cost only broadcast-probe time.
+    * extraction -> forward and reverse probes of the broadcast lookups
+    * (`prepare(cache = false)`, the same probe as `geocodePrepared`) ->
+    * conditional projection -> tile assignment. The big side never
+    * shuffles, never aggregates, and is scanned exactly once; the only
+    * exchange in the whole job is the optional per-tile rollup. Skew needs
+    * no salting here because there is no shuffle key at all — hot cells
+    * cost only probe time.
     */
   def geocode(spark: SparkSession, pages: DataFrame, nameIndex: DataFrame,
               polygons: DataFrame, polyCells: DataFrame, scanner: DictScanner,
@@ -70,39 +73,64 @@ object Pipeline {
     }
 
     maybeStage(spark, cfg, "hits", fp) {
-      val prep = prepare(nameIndex, polygons, polyCells, cfg, cache = false)
-      fuseHits(withCoordCell(mentions), prep.top1,
-        df => df.join(broadcast(prep.packed), Seq("cell"), "left"), cfg)
+      probeHits(mentions, prepare(nameIndex, polygons, polyCells, cfg, cache = false), cfg)
     }
   }
 
-  /** The two broadcast-side indexes, built once and reusable across batches.
-    * In production the gazetteer/polygon indexes amortize over the whole
-    * crawl — rebuild them per batch only if the gazetteer changed. `cache`
-    * persists them so repeated geocodePrepared calls pay only the (small)
-    * broadcast hash-relation build, not the index aggregation. */
-  case class Prepared(top1: DataFrame, packed: DataFrame)
+  /** The prepared indexes of the broadcast path. `lookup` is what batches
+    * probe; `top1` (gaz_key + g_* columns) and `packed` (the packed cell
+    * index) are the same indexes as DataFrames, for callers that time or
+    * join them. */
+  case class Prepared(top1: DataFrame, packed: DataFrame, lookup: Broadcast[GeoLookup]) {
+    /** Destroys the lookup broadcast and unpersists `top1`. Batches over
+      * this Prepared fail afterwards. */
+    def release(): Unit = {
+      lookup.destroy()
+      top1.unpersist()
+    }
+  }
 
+  /** Builds the forward and reverse lookups on the driver and broadcasts
+    * them once (see GeoLookup). In production the gazetteer/polygon indexes
+    * amortize over the whole crawl — prepare again only if the gazetteer
+    * changed. `cache` persists `top1`, which the lookup build reads; `packed`
+    * is left lazy, as no batch reads it. A long-lived driver that swaps
+    * indexes calls `release()` on the old Prepared to free the broadcast and
+    * the cache. */
   def prepare(nameIndex: DataFrame, polygons: DataFrame, polyCells: DataFrame,
               cfg: Config = Config(), cache: Boolean = true): Prepared = {
-    val top1 = Forward.top1Index(nameIndex, cfg.fwdParams)
+    val top1 = if (cache) top1Index(nameIndex, cfg).cache() else top1Index(nameIndex, cfg)
+    val lookup = GeoLookup.build(top1, polygons, polyCells)
+    Prepared(top1, Reverse.packedCellIndex(polygons, polyCells),
+      nameIndex.sparkSession.sparkContext.broadcast(lookup))
+  }
+
+  private def top1Index(nameIndex: DataFrame, cfg: Config): DataFrame =
+    Forward.top1Index(nameIndex, cfg.fwdParams)
       .select(col("gaz_key"), col("place_id").as("g_place_id"),
         col("name").as("g_name"), col("lon").as("g_lon"), col("lat").as("g_lat"),
         col("country_code").as("g_cc"), col("city").as("g_city"),
         col("road").as("g_road"), col("house_number").as("g_house"),
         col("postcode").as("g_postcode"))
-    val packed = Reverse.packedCellIndex(polygons, polyCells)
-    if (cache) Prepared(top1.cache(), packed.cache())
-    else Prepared(top1, packed)
-  }
 
   /** Steady-state batch geocode over PRE-BUILT indexes (see prepare): the
-    * shape of a production crawl loop, where the broadcast sides are built
-    * once and every pages batch pays only its own map work. */
+    * shape of a production crawl loop. The lookups were broadcast at
+    * set-up, so a batch runs no broadcast job: it is one map stage (scan ->
+    * extract -> probe -> tile) plus whatever the caller adds. */
   def geocodePrepared(spark: SparkSession, pages: DataFrame, prep: Prepared,
                       scanner: DictScanner, cfg: Config = Config()): DataFrame =
-    fuseHits(withCoordCell(Extract.mentions(spark, pages, scanner)), prep.top1,
-      df => df.join(broadcast(prep.packed), Seq("cell"), "left"), cfg)
+    probeHits(Extract.mentions(spark, pages, scanner), prep, cfg)
+
+  /** Forward and reverse probes of the broadcast lookups, inside the map
+    * stage of `mentions`. */
+  private def probeHits(mentions: DataFrame, prep: Prepared, cfg: Config): DataFrame = {
+    val fwd = GeoLookup.forwardUdf(prep.lookup)
+    val rev = GeoLookup.reverseUdf(prep.lookup)
+    fuseHits(mentions
+      .withColumn("__fwd", fwd(col("norm")))
+      .select(col("*"), col("__fwd.*")).drop("__fwd")
+      .withColumn("__rev", rev(col("lon"), col("lat"))), cfg)
+  }
 
   /**
    * World-polygon-scale variant (the flagship shape when admin polygons
@@ -186,11 +214,12 @@ object Pipeline {
                             packedTable: String, nameIndex: DataFrame,
                             polygons: DataFrame, polyCells: DataFrame,
                             cfg: Config = Config()): DataFrame = {
-    val prep = prepare(nameIndex, polygons, polyCells, cfg, cache = false)
-    fuseHits(spark.table(mentionsTable), prep.top1,
-      df => df.hint("merge")
-        .join(spark.table(packedTable), Seq("cell"), "left"),
-      cfg)
+    val top1 = top1Index(nameIndex, cfg)
+    val mentions = spark.table(mentionsTable)
+    val joined = mentions.join(broadcast(top1), mentions("norm") === top1("gaz_key"), "left")
+      .hint("merge").join(spark.table(packedTable), Seq("cell"), "left")
+    fuseHits(joined.withColumn("__rev",
+      Reverse.bestPolygon(col("cands"), col("lon"), col("lat"))).drop("cands"), cfg)
   }
 
   /** Cheap order-insensitive content digest: row count + bit_xor of
@@ -208,17 +237,11 @@ object Pipeline {
         lit(graft.geo.CellIndex.FineLevel))))
 
   /** The fused single-pass projection shared by the broadcast and bucketed
-    * paths; `top1` is the prepared forward index, `revJoin` supplies the
-    * packed-index join strategy. */
-  private def fuseHits(mentions: DataFrame, top1: DataFrame,
-                       revJoin: DataFrame => DataFrame, cfg: Config): DataFrame = {
+    * paths, over mentions that carry their forward top-1 place as `g_*`
+    * columns and their best polygon as the `__rev` struct. */
+  private def fuseHits(joined: DataFrame, cfg: Config): DataFrame = {
       val lang = cfg.revParams.language.map(_.toLowerCase(java.util.Locale.ROOT))
       val fwdCountry = Format.countryNameCol(col("g_cc"), lang)
-
-      val joined = revJoin(
-          mentions.join(broadcast(top1), mentions("norm") === top1("gaz_key"), "left"))
-        .withColumn("__rev", Reverse.bestPolygon(col("cands"), col("lon"), col("lat")))
-        .drop("cands")
 
       def rv(f: String) = col("__rev").getField(f)
       val revCity = lang.map(l => coalesce(element_at(rv("loc_city"), l), rv("fmt_city")))

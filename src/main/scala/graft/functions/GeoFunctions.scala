@@ -94,9 +94,6 @@ object GeoFunctions {
   def cellParent(cell: Column, parentLevel: Column): Column =
     invoke(cellCls, LongType, "parent", cell, parentLevel)
 
-  def cellCenterLon(cell: Column): Column = invoke(cellCls, DoubleType, "centerLon", cell)
-  def cellCenterLat(cell: Column): Column = invoke(cellCls, DoubleType, "centerLat", cell)
-
   def cellLevel(cell: Column): Column = invoke(cellCls, IntegerType, "level", cell)
 
   /** Compact a covering-cell array to canonical mixed levels (cell-union

@@ -29,11 +29,3 @@ final case class TablePageSource(table: String) extends PageSource {
 final case class SynthPageSource(n: Long, parts: Int = 32) extends PageSource {
   def load(spark: SparkSession): DataFrame = Synth.pages(spark, n, parts).toDF()
 }
-
-object PageSink {
-  /** Write geocoded output partitioned for downstream pruning: tile_z is
-    * constant per job, tile_x gives spatial locality; at 10^12 scale add
-    * warc_ts date as the outer partition. */
-  def writeHits(hits: DataFrame, path: String): Unit =
-    hits.write.mode("overwrite").partitionBy("tile_z").parquet(path)
-}

@@ -104,8 +104,12 @@ class BboxJoinSpec extends AnyFunSuite {
     val b = boxesB.toDF("b_id", "b_min_lon", "b_min_lat", "b_max_lon", "b_max_lat")
     val df = BboxJoin.overlapJoin(a, b, 3.0, broadcastB = false)
     // past-the-broadcast-wall path: the planner (not a forced hint) picks
-    // the strategy — the optimized plan must carry no ResolvedHint
-    assert(!df.queryExecution.optimizedPlan.toString.contains("hint"),
+    // the strategy. The optimized plan prints a forced broadcast as
+    // `rightHint=(strategy=broadcast)` on the join; the default path shows
+    // it, the broadcastB=false path must not
+    val forced = BboxJoin.overlapJoin(a, b, 3.0).queryExecution.optimizedPlan.toString
+    assert(forced.contains("strategy=broadcast"), forced)
+    assert(!df.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
       df.queryExecution.optimizedPlan.toString)
     val got = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->

@@ -115,7 +115,7 @@ class WorldScaleSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(a === b)
     assert(a.nonEmpty)
-    prep.top1.unpersist(); prep.packed.unpersist()
+    prep.release()
   }
 
   test("reverseBucketed equals broadcast reverse on holed filler polygons") {
