@@ -22,11 +22,12 @@ object BenchOne {
       .master(s"local[$cpus]")
       .appName(s"graft-bench-one-$cpus")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE toggle (default on): the flagship plan is map-only — two
-      // broadcast joins, zero data shuffles — so AQE's per-query-stage
-      // re-optimization barriers buy nothing here and add fixed driver
-      // latency per rep; GRAFT_BENCH_AQE=0 measures the job the way a
-      // production deployment would actually configure this plan shape.
+      // AQE toggle (default on): the flagship batch is a single map stage —
+      // the lookups are broadcast once at set-up, so there is no join and no
+      // data shuffle — and AQE's per-query-stage re-optimization barriers
+      // buy nothing here and add fixed driver latency per rep;
+      // GRAFT_BENCH_AQE=0 measures the job the way a production deployment
+      // would actually configure this plan shape.
       .config("spark.sql.adaptive.enabled",
         (sys.env.getOrElse("GRAFT_BENCH_AQE", "1") != "0").toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -49,31 +50,13 @@ object BenchOne {
       graft.text.TextCore.fnv64(Synth.fixtureTexts.mkString(" ") + "|v2-256"))
     val pagesDir =
       s"${sys.env.getOrElse("GRAFT_BENCH_TMP", "/tmp")}/graft_bench_pages_${n}_$synthFp"
-    if (sys.env.contains("GRAFT_BENCH_STAGES")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = for {
-            s <- si.submissionTime; e <- si.completionTime
-          } yield e - s
-          System.err.println(s"GRAFT_STAGE ${si.stageId} tasks=${si.numTasks} " +
-            s"wall=${wall.getOrElse(-1L)}ms " +
-            s"cpu=${si.taskMetrics.executorCpuTime / 1000000}ms " +
-            s"run=${si.taskMetrics.executorRunTime}ms " +
-            s"gc=${si.taskMetrics.jvmGCTime}ms " +
-            s"shufW=${si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1024}KB " +
-            s"name=${si.name.take(60)}")
-        }
-      })
-    }
     try {
       // reuse across sequential child JVMs (same n => identical table);
       // partition count fixed so the table is byte-identical either way
       // 256 input splits: 8 task waves on 32 cores (64 splits = 2 waves made
       // the 32-core level straggler-sensitive — one slow task cost 25% of a
       // wave; at 8 waves stragglers amortize)
-      if (benchMode != "cpuprobe" && !new java.io.File(s"$pagesDir/_SUCCESS").exists()) {
+      if (!new java.io.File(s"$pagesDir/_SUCCESS").exists()) {
         Synth.pages(spark, n, 256).toDF()
           .write.mode("overwrite").parquet(pagesDir)
       }
@@ -108,26 +91,15 @@ object BenchOne {
         benchMode match {
           case "synth" =>
             pagesDf.select(sum(length(col("text")))).collect()(0).getLong(0)
-          case "extract" =>
-            graft.etl.Extract.mentions(spark, pagesDf, scanner).count()
-          case "cpuprobe" =>
-            // register-only compute probe, ~no memory traffic: quantifies how
-            // pure COMPUTE scales on this host so the bandwidth-bound string
-            // workload's 8->32 ceiling is attributable in the artifact itself
-            import spark.implicits._
-            spark.range(0, n, 1, cpus * 4).map { i =>
-              var h = i
-              var r = 0
-              while (r < 4096) { h = graft.text.TextCore.mix(h); r += 1 }
-              h
-            }.filter(_ == 42L).count() + n
           case "worldscale" =>
             // the bucketed-SMJ reverse path, 5k+ multi-ring polygons via
             // GRAFT_BENCH_POLYS; the timed run INCLUDES the bucketed writes
             // (the worst-case cost when the layout cannot be amortized —
             // reusePacked=false so every rep re-pays BOTH writes)
-            Pipeline.geocodeWorldScale(spark, pagesDf, idx, polys, cells, scanner,
-              wsDir, buckets = cpus, reusePacked = false).count()
+            val (mentionsTable, packedTable) = Pipeline.worldScaleLayout(spark,
+              pagesDf, polys, cells, scanner, wsDir, buckets = cpus, reusePacked = false)
+            Pipeline.geocodeWorldScaleRead(spark, mentionsTable, packedTable,
+              idx, polys, cells).count()
           case "worldscale_read" =>
             // steady-state half of the same job: bucketed tables pre-built
             // (wsTables, untimed), reps pay only extraction-free read + SMJ
@@ -137,13 +109,9 @@ object BenchOne {
             Pipeline.geocodePrepared(spark, pagesDf, prep, scanner).count()
         }
       }
-      def table() =
-        if (benchMode == "cpuprobe") spark.emptyDataFrame
-        else spark.read.parquet(pagesDir)
+      def table() = spark.read.parquet(pagesDir)
       if (benchMode == "worldscale_read") { wsTables; pipeline(table()) } // layout + warm-up
-      else if (benchMode != "cpuprobe")
-        pipeline(table().limit(math.min(n / 4, 100000L).toInt)) // JIT warm-up
-      else pipeline(table()) // probe warm-up (JIT the mix loop)
+      else pipeline(table().limit(math.min(n / 4, 100000L).toInt)) // JIT warm-up
       var best = Double.MaxValue
       var hits = 0L
       var r = 0

@@ -5,12 +5,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.xxhash64
 
-import graft.engine.{Gazetteer, Pipeline, Reverse}
+import graft.engine.{Gazetteer, Pipeline}
 import graft.fixtures.Synth
 
-/** Writes PLANS.md: `explain(formatted)` of the flagship pipeline and the
-  * reverse shuffle fallback — committed so plan-shape regressions are
-  * reviewable in diffs. */
+/** Writes PLANS.md: `explain(formatted)` of the flagship pipeline on both
+  * index layouts and of the other scale-critical operators — committed so
+  * plan-shape regressions are reviewable in diffs. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -25,12 +25,9 @@ object PlanDump {
     val cells = Gazetteer.polygonCellIndex(polys)
     val pages = Synth.pages(spark, 1000, 4).toDF()
 
-    val pipeline = Pipeline.geocode(spark, pages, idx, polys, cells,
-      Gazetteer.scanner())
+    val pipeline = Pipeline.geocodePrepared(spark, pages,
+      Pipeline.prepare(idx, polys, cells), Gazetteer.scanner())
     val tiles = Pipeline.tiles(pipeline)
-    val revShuffle = Reverse.reverse(
-      Seq((1L, 2.1287, 41.40139)).toDF("query_id", "lon", "lat"),
-      polys, cells, broadcastIndex = false)
 
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(
@@ -48,15 +45,15 @@ object PlanDump {
     md.append(fmt(pipeline)).append("\n```\n\n")
     md.append("## Per-tile rollup (the job's only exchange)\n\n```\n")
     md.append(fmt(tiles)).append("\n```\n\n")
-    md.append("## Reverse shuffle-join fallback (world-scale polygons)\n\n```\n")
-    md.append(fmt(revShuffle)).append("\n```\n\n")
 
     // world-scale flagship: bucketed tables -> zero-exchange SMJ reverse join
     val wh = Files.createTempDirectory("graft-plandump").toString
     val worldPolys = Gazetteer.polygonsDF(spark, graft.fixtures.World.polygons(filler = 60))
     val worldCells = Gazetteer.polygonCellIndex(worldPolys)
-    val world = Pipeline.geocodeWorldScale(spark, pages, idx, worldPolys, worldCells,
-      Gazetteer.scanner(), wh, buckets = 4)
+    val (mentionsTable, packedTable) = Pipeline.worldScaleLayout(spark, pages,
+      worldPolys, worldCells, Gazetteer.scanner(), wh, buckets = 4)
+    val world = Pipeline.geocodeWorldScaleRead(spark, mentionsTable, packedTable, idx,
+      worldPolys, worldCells)
     md.append("## World-scale fused pipeline (bucketed SMJ reverse join)\n\n")
     md.append("Both sides cell-bucketed tables (the layout IS the shuffle, paid at\n")
     md.append("write time): the SortMergeJoin on `cell` has NO Exchange on either\n")

@@ -172,7 +172,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val (_, idx, polys, cells, scanner) = world(spark)
     val pages = Synth.pagesDF(spark, "/root/testdata/sf0.001")
-    Pipeline.geocode(spark, pages, idx, polys, cells, scanner)
+    Pipeline.geocodePrepared(spark, pages, Pipeline.prepare(idx, polys, cells), scanner)
   }
 
   private def docs(s: SparkSession, dir: String) =
@@ -1053,7 +1053,7 @@ object SparkEntry {
     "geo_forward_pages" -> ((s, dir) => {
       val (_, idx, _, _, scanner) = world(s)
       oracleWorldTables(s)
-      Forward.geocodePages(s, oraclePages(s, dir), idx, scanner)
+      Forward.geocodeMentions(graft.etl.Extract.mentions(s, oraclePages(s, dir), scanner), idx)
         .select("url", "surface", "name", "place_id", "lon", "lat", "result_rank")
     }),
     // F5/F7/R4 — the *_full result surface as its own contract row: the
@@ -1133,7 +1133,8 @@ object SparkEntry {
     "geo_pipeline_tiles" -> ((s, dir) => {
       val (_, idx, polys, cells, scanner) = world(s)
       oracleWorldTables(s)
-      val hits = Pipeline.geocode(s, oraclePages(s, dir), idx, polys, cells, scanner)
+      val hits = Pipeline.geocodePrepared(s, oraclePages(s, dir),
+        Pipeline.prepare(idx, polys, cells), scanner)
       // approx_pages (HLL sketch) stays an engine output but is excluded from
       // the contract selection — a sketch is not oracle-comparable
       Pipeline.tiles(hits).select("tile_z", "tile_x", "tile_y", "n_hits")
@@ -1854,9 +1855,9 @@ object SparkEntry {
           "mentions" -> Seq("url", "surface", "kind", "text_sha256"),
           "hits" -> Seq("url", "surface", "verb", "ref_id", "tile_x", "tile_y",
             "text_sha256")))
-      Pipeline.geocode(s, pages, idx, polys, cells, scanner, cfg).count()
-      Pipeline.geocode(s, pages, idx, polys, cells, scanner,
-        cfg.copy(runId = "resume")).count()
+      val prep = Pipeline.prepare(idx, polys, cells, cfg)
+      Pipeline.geocodePrepared(s, pages, prep, scanner, cfg).count()
+      Pipeline.geocodePrepared(s, pages, prep, scanner, cfg.copy(runId = "resume")).count()
       Checkpoint.metrics(s, ck)
         .groupBy("stage", "run_id", "resumed")
         .agg(sum("rows").as("rows"), expr("bit_xor(checksum)").as("checksum"))

@@ -35,9 +35,9 @@ import graft.geo.CellIndex
  * BROADCAST hash join and the points side is map-only — explode, probe,
  * filter, zero exchanges. Past the broadcast wall, bucket BOTH sides by the
  * cover-level cell id (the exploded points side on cand_cell, places on
- * cell) exactly as Reverse.reverseBucketed does for PIP, and the join runs
- * as a zero-exchange sort-merge join; radius skew (dense urban cells) is the
- * same salted two-path story as engine/Salt.
+ * cell) exactly as Pipeline.geocodeWorldScaleRead does for PIP, and the
+ * join runs as a zero-exchange sort-merge join; radius skew (dense urban
+ * cells) is the same salted two-path story as engine/Salt.
  */
 object DistanceJoin {
 
@@ -93,7 +93,7 @@ object DistanceJoin {
 
   /**
    * World-scale layout: both sides materialized as tables BUCKETED on the
-   * cover-level cell (mirrors Pipeline.geocodeWorldScale / Reverse's packed
+   * cover-level cell (mirrors Pipeline.worldScaleLayout / Reverse's packed
    * bucketed tables) — for when the places side outgrows the broadcast
    * budget. The exploded point-side cover and the places both pay their
    * shuffle ONCE at write time; every subsequent query-batch join is a

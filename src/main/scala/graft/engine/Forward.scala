@@ -1,10 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.etl.{DictScanner, Extract, Norm}
+import graft.etl.Norm
 import graft.functions.GeoFunctions._
 import graft.model.ForwardParams
 
@@ -165,18 +165,9 @@ object Forward {
       .drop("gaz_key", "norm")
   }
 
-  /**
-   * E2+E4 — the page-scale pipeline: pages -> mention extraction -> forward
-   * join. Every output row carries url + text_sha256 (byte-identity
-   * invariant). Coordinate-literal mentions pass through with their parsed
-   * (lon, lat) and kind='coord'.
-   */
-  def geocodePages(spark: SparkSession, pages: DataFrame, nameIndex: DataFrame,
-                   scanner: DictScanner,
-                   params: ForwardParams = ForwardParams()): DataFrame =
-    geocodeMentions(Extract.mentions(spark, pages, scanner), nameIndex, params)
-
-  /** Forward-join pre-extracted mentions. Name mentions (kind='name') resolve
+  /** E2+E4 — forward-join pre-extracted mentions (`Extract.mentions`): the
+    * page-scale verb path. Every output row carries url + text_sha256
+    * (byte-identity invariant). Name mentions (kind='name') resolve
     * against the gazetteer index — limit=1 uses the shuffle-free top1Index
     * join; general k ranks per (url, mention). Coordinate-literal mentions
     * (kind='coord') pass through with their parsed (lon, lat) and null

@@ -11,13 +11,19 @@ import graft.model.{ForwardParams, ReverseParams}
  * The flagship end-to-end job (north_star): pages -> mention/coordinate
  * extraction -> forward geocode (name mentions -> gazetteer top-1 place) +
  * reverse geocode (coordinate literals -> polygon PIP) -> web-mercator tile
- * assignment. The forward and reverse lookups are built on the driver at
- * set-up (`prepare`) and broadcast once; a batch is then a single map stage
- * (scan -> extract -> probe -> tile) plus the tile rollup, its only
- * shuffle. Every output row carries text_sha256 (byte-identity invariant).
+ * assignment. Every output row carries text_sha256 (byte-identity
+ * invariant). There is one path per index layout:
  *
- * Stage boundaries can checkpoint (E10) via cfg.ckptDir — each stage then
- * resumes idempotently from Parquet + lineage.
+ *  - broadcast (`prepare` + `geocodePrepared`): the forward and reverse
+ *    lookups are built on the driver at set-up and broadcast once; a batch
+ *    is a single map stage (scan -> extract -> probe -> tile) plus the tile
+ *    rollup, its only shuffle. Stage boundaries can checkpoint (E10) via
+ *    cfg.ckptDir — each stage then resumes idempotently from Parquet +
+ *    lineage.
+ *  - bucketed (`worldScaleLayout` + `geocodeWorldScaleRead`): for admin
+ *    polygons past the broadcast budget, the packed cell index and the
+ *    mentions are written as cell-bucketed tables and the reverse side is a
+ *    zero-exchange sort-merge join.
  */
 object Pipeline {
 
@@ -50,56 +56,26 @@ object Pipeline {
     java.lang.Long.toHexString(graft.text.TextCore.fnv64(s))
   }
 
-  /** Geocoded hits: one row per (url, mention) with resolved coordinates.
-    * verb='forward' rows resolve name mentions to gazetteer places;
-    * verb='reverse' rows resolve coordinate literals to admin polygons.
-    *
-    * FUSED single-pass plan (the 100 TB shape): one scan of pages ->
-    * extraction -> forward and reverse probes of the broadcast lookups
-    * (`prepare(cache = false)`, the same probe as `geocodePrepared`) ->
-    * conditional projection -> tile assignment. The big side never
-    * shuffles, never aggregates, and is scanned exactly once; the only
-    * exchange in the whole job is the optional per-tile rollup. Skew needs
-    * no salting here because there is no shuffle key at all — hot cells
-    * cost only probe time.
-    */
-  def geocode(spark: SparkSession, pages: DataFrame, nameIndex: DataFrame,
-              polygons: DataFrame, polyCells: DataFrame, scanner: DictScanner,
-              cfg: Config = Config()): DataFrame = {
-
-    val fp = fingerprintOf(pages, cfg)
-    val mentions = maybeStage(spark, cfg, "mentions", fp) {
-      Extract.mentions(spark, pages, scanner)
-    }
-
-    maybeStage(spark, cfg, "hits", fp) {
-      probeHits(mentions, prepare(nameIndex, polygons, polyCells, cfg, cache = false), cfg)
-    }
-  }
-
   /** The prepared indexes of the broadcast path. `lookup` is what batches
     * probe; `top1` (gaz_key + g_* columns) and `packed` (the packed cell
     * index) are the same indexes as DataFrames, for callers that time or
     * join them. */
   case class Prepared(top1: DataFrame, packed: DataFrame, lookup: Broadcast[GeoLookup]) {
-    /** Destroys the lookup broadcast and unpersists `top1`. Batches over
-      * this Prepared fail afterwards. */
-    def release(): Unit = {
-      lookup.destroy()
-      top1.unpersist()
-    }
+    /** Destroys the lookup broadcast. Batches over this Prepared fail
+      * afterwards. */
+    def release(): Unit = lookup.destroy()
   }
 
   /** Builds the forward and reverse lookups on the driver and broadcasts
     * them once (see GeoLookup). In production the gazetteer/polygon indexes
     * amortize over the whole crawl — prepare again only if the gazetteer
-    * changed. `cache` persists `top1`, which the lookup build reads; `packed`
-    * is left lazy, as no batch reads it. A long-lived driver that swaps
-    * indexes calls `release()` on the old Prepared to free the broadcast and
-    * the cache. */
+    * changed. Nothing is cached: the lookup build reads `top1` once, and
+    * `top1` and `packed` stay lazy, as no batch reads them. A long-lived
+    * driver that swaps indexes calls `release()` on the old Prepared to free
+    * the broadcast. */
   def prepare(nameIndex: DataFrame, polygons: DataFrame, polyCells: DataFrame,
-              cfg: Config = Config(), cache: Boolean = true): Prepared = {
-    val top1 = if (cache) top1Index(nameIndex, cfg).cache() else top1Index(nameIndex, cfg)
+              cfg: Config = Config()): Prepared = {
+    val top1 = top1Index(nameIndex, cfg)
     val lookup = GeoLookup.build(top1, polygons, polyCells)
     Prepared(top1, Reverse.packedCellIndex(polygons, polyCells),
       nameIndex.sparkSession.sparkContext.broadcast(lookup))
@@ -113,59 +89,59 @@ object Pipeline {
         col("road").as("g_road"), col("house_number").as("g_house"),
         col("postcode").as("g_postcode"))
 
-  /** Steady-state batch geocode over PRE-BUILT indexes (see prepare): the
+  /** Geocoded hits, one row per resolved (url, mention): verb='forward'
+    * rows resolve name mentions to gazetteer places, verb='reverse' rows
+    * resolve coordinate literals to admin polygons.
+    *
+    * Steady-state batch geocode over PRE-BUILT indexes (see prepare): the
     * shape of a production crawl loop. The lookups were broadcast at
     * set-up, so a batch runs no broadcast job: it is one map stage (scan ->
-    * extract -> probe -> tile) plus whatever the caller adds. */
+    * extract -> forward and reverse probes of the broadcast lookups ->
+    * conditional projection -> tile) plus whatever the caller adds. The big
+    * side never shuffles, never aggregates, and is scanned exactly once;
+    * skew needs no salting because there is no shuffle key at all — hot
+    * cells cost only probe time.
+    *
+    * With cfg.ckptDir set, the `mentions` and `hits` stages checkpoint
+    * (Checkpoint.stage) under a fingerprint of the page schema and the job
+    * params, so a rerun resumes each stage instead of recomputing it. */
   def geocodePrepared(spark: SparkSession, pages: DataFrame, prep: Prepared,
-                      scanner: DictScanner, cfg: Config = Config()): DataFrame =
-    probeHits(Extract.mentions(spark, pages, scanner), prep, cfg)
-
-  /** Forward and reverse probes of the broadcast lookups, inside the map
-    * stage of `mentions`. */
-  private def probeHits(mentions: DataFrame, prep: Prepared, cfg: Config): DataFrame = {
-    val fwd = GeoLookup.forwardUdf(prep.lookup)
-    val rev = GeoLookup.reverseUdf(prep.lookup)
-    fuseHits(mentions
-      .withColumn("__fwd", fwd(col("norm")))
-      .select(col("*"), col("__fwd.*")).drop("__fwd")
-      .withColumn("__rev", rev(col("lon"), col("lat"))), cfg)
+                      scanner: DictScanner, cfg: Config = Config()): DataFrame = {
+    val fp = fingerprintOf(pages, cfg)
+    val mentions = maybeStage(spark, cfg, "mentions", fp) {
+      Extract.mentions(spark, pages, scanner)
+    }
+    maybeStage(spark, cfg, "hits", fp) {
+      val fwd = GeoLookup.forwardUdf(prep.lookup)
+      val rev = GeoLookup.reverseUdf(prep.lookup)
+      fuseHits(mentions
+        .withColumn("__fwd", fwd(col("norm")))
+        .select(col("*"), col("__fwd.*")).drop("__fwd")
+        .withColumn("__rev", rev(col("lon"), col("lat"))), cfg)
+    }
   }
 
-  /**
-   * World-polygon-scale variant (the flagship shape when admin polygons
-   * outgrow the broadcast budget): the packed cell index lives as a
-   * cell-BUCKETED table (written once via Reverse.writePackedBucketed —
-   * amortized over every batch), and the extraction output is written
-   * bucketed by the same key at its stage boundary, so the reverse join is a
-   * ZERO-EXCHANGE sort-merge join. The forward side stays a broadcast hash
-   * join (the top-1 name index is always small). The only price vs the
-   * broadcast path is the bucketed write of the mentions — which a
-   * checkpointing pipeline pays anyway (E10 stages materialize).
-   */
-  def geocodeWorldScale(spark: SparkSession, pages: DataFrame, nameIndex: DataFrame,
-                        polygons: DataFrame, polyCells: DataFrame, scanner: DictScanner,
-                        warehouseDir: String, buckets: Int = 32,
-                        cfg: Config = Config(),
-                        reusePacked: Boolean = true): DataFrame = {
-    val (mentionsTable, packedTable) = worldScaleLayout(spark, pages, polygons,
-      polyCells, scanner, warehouseDir, buckets, cfg, reusePacked)
-    geocodeWorldScaleRead(spark, mentionsTable, packedTable, nameIndex,
-      polygons, polyCells, cfg)
-  }
-
-  /** The write half of the world-scale path: materialize the cell-bucketed
-    * mentions + packed-polygon tables. Table names carry cfg.runId so
-    * concurrent jobs sharing a metastore never clobber each other. When
-    * `reusePacked` and a packed table with a matching fingerprint already
-    * exists (Checkpoint-style probe on its path), its write is SKIPPED — the
-    * packed index amortizes over every batch in production, so a steady-state
-    * crawl pays it once, not per invocation. */
+  /** The write half of the world-scale path (the flagship shape when admin
+    * polygons outgrow the broadcast budget): materialize the cell-bucketed
+    * mentions + packed-polygon tables, so that `geocodeWorldScaleRead` joins
+    * them with a ZERO-EXCHANGE sort-merge join. The bucketed mentions write
+    * is the only price vs the broadcast path — one a checkpointing pipeline
+    * pays anyway (E10 stages materialize). Table names carry cfg.runId so
+    * concurrent jobs sharing a metastore never clobber each other; a runId
+    * that is not a plain identifier (letters, digits, `_`) fails loudly with
+    * an IllegalArgumentException before anything is written, as it could not
+    * name a table. When `reusePacked` and a packed table with a matching
+    * fingerprint already exists (Checkpoint-style probe on its path), its
+    * write is SKIPPED — the packed index amortizes over every batch in
+    * production, so a steady-state crawl pays it once, not per invocation. */
   def worldScaleLayout(spark: SparkSession, pages: DataFrame,
                        polygons: DataFrame, polyCells: DataFrame, scanner: DictScanner,
                        warehouseDir: String, buckets: Int = 32,
                        cfg: Config = Config(),
                        reusePacked: Boolean = true): (String, String) = {
+    require(cfg.runId.matches("[A-Za-z0-9_]+"),
+      "worldScaleLayout names tables after cfg.runId, so it must be a plain " +
+        s"identifier of letters, digits and '_': '${cfg.runId}'")
     val mentionsTable = s"graft_mentions_bucketed_${cfg.runId}"
     val packedTable = s"graft_polycells_bucketed_${cfg.runId}"
     val packedPath = s"$warehouseDir/polycells_bucketed_${cfg.runId}"
@@ -207,9 +183,10 @@ object Pipeline {
     (mentionsTable, packedTable)
   }
 
-  /** The read half of the world-scale path over pre-written bucketed tables:
-    * zero-exchange SMJ reverse + broadcast forward — the steady-state cost a
-    * crawl pays per batch once the layout exists. */
+  /** The read half of the world-scale path over pre-written bucketed tables
+    * (see worldScaleLayout): zero-exchange SMJ reverse + broadcast forward
+    * (the top-1 name index is always small) — the steady-state cost a crawl
+    * pays per batch once the layout exists. */
   def geocodeWorldScaleRead(spark: SparkSession, mentionsTable: String,
                             packedTable: String, nameIndex: DataFrame,
                             polygons: DataFrame, polyCells: DataFrame,

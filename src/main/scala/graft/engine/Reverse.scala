@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
@@ -15,10 +14,10 @@ import graft.model.ReverseParams
  * non-equi spatial predicate therefore never sees a cross product — only
  * same-cell candidates.
  *
- * Scale shape: points (big) stay unshuffled when the cell index broadcasts
- * (default); at world polygon scale pass broadcastIndex=false to shuffle both
- * sides on `cell` instead — the join key is already salted by geography
- * (cells), and AQE skew-join splits dense urban cells further (E9).
+ * Scale shape: points (big) stay unshuffled because the cell index
+ * broadcasts. At world polygon scale the packed index is written as a
+ * cell-bucketed table instead (writePackedBucketed) and read by
+ * Pipeline.geocodeWorldScaleRead with a zero-exchange sort-merge join.
  *
  * Reference semantics preserved:
  *  - single result per point, most-specific polygon
@@ -69,42 +68,23 @@ object Reverse {
    * Output: one row per input point, formatted + components,
    * geocode_status in {ok, no_result}.
    *
-   * Default (broadcastIndex=true) is MAP-ONLY: broadcast hash join on the
-   * level-13 cell against the packed cell index, then ray-cast + best-pick
-   * as array expressions. The points side never shuffles and never
-   * aggregates — reverse geocoding 10^12 points is a single map stage.
-   * broadcastIndex=false is the world-polygon fallback: shuffle join on
-   * `cell` (geography-salted key) + groupBy/max_by selection.
+   * MAP-ONLY: broadcast hash join on the level-13 cell against the packed
+   * cell index, then ray-cast + best-pick as array expressions. The points
+   * side never shuffles and never aggregates — reverse geocoding 10^12
+   * points is a single map stage.
    */
   def reverse(points: DataFrame, polygons: DataFrame, cellIndex: DataFrame,
               params: ReverseParams = ReverseParams(),
-              broadcastIndex: Boolean = true,
               tzByCell: Map[Long, String] = Map.empty): DataFrame = {
     val pts = points.withColumn("cell", cellId(col("lon"), col("lat"),
       lit(graft.geo.CellIndex.FineLevel)))
-
-    val best =
-      if (broadcastIndex) {
-        val packed = packedCellIndex(polygons, cellIndex)
-        bestFromPacked(pts.join(broadcast(packed), Seq("cell"), "left"))
-      } else {
-        val cand = pts.join(cellIndex, Seq("cell"), "inner")
-          .join(broadcast(polygons), Seq("polygon_id"), "inner")
-          .filter(rayCast(col("lon"), col("lat"),
-            col("ring_offsets"), col("ring_lons"), col("ring_lats")))
-        val payload = (Seq("lon", "lat") ++ packedFields).distinct
-        val agg = cand.groupBy(col("query_id"))
-          .agg(max_by(struct(payload.map(col): _*),
-            struct(col("admin_level"), -col("polygon_id"))).as("__best"))
-          .select(col("query_id") +: payload.map(c => col(s"__best.$c").as(c)): _*)
-        // restore non-matching points (left semantics) and any extra columns
-        points.join(agg.drop("lon", "lat"), Seq("query_id"), "left")
-      }
-    finish(best, points, params, tzByCell)
+    val packed = packedCellIndex(polygons, cellIndex)
+    finish(bestFromPacked(pts.join(broadcast(packed), Seq("cell"), "left")),
+      points, params, tzByCell)
   }
 
   /** Ray-cast + best-pick over a (points LEFT JOIN packed-index) frame —
-    * shared by the broadcast path and the bucketed-SMJ world-scale path. */
+    * shared by `reverse` and `reverseCompact`. */
   private def bestFromPacked(joined: DataFrame): DataFrame =
     joined
       .withColumn("__best", bestPolygon(col("cands"), col("lon"), col("lat")))
@@ -151,29 +131,9 @@ object Reverse {
     finish(bestFromPacked(joined), points, params, tzByCell)
   }
 
-  /**
-   * World-polygon-scale reverse: both sides are cell-bucketed tables, so the
-   * join is a ZERO-EXCHANGE sort-merge join — the bucketed layout IS the
-   * shuffle, paid once at write time (and the packed-index write amortizes
-   * over every batch that reads it). Selection stays an array expression;
-   * nothing aggregates after the join.
-   *
-   * `pointsTable` must contain a `cell` column (level-13) and be bucketed by
-   * it; `packedTable` is the packedCellIndex written with the same bucket
-   * count (see writePackedBucketed).
-   */
-  def reverseBucketed(spark: org.apache.spark.sql.SparkSession,
-                      pointsTable: String, packedTable: String,
-                      params: ReverseParams = ReverseParams(),
-                      tzByCell: Map[Long, String] = Map.empty): DataFrame = {
-    val pts = spark.table(pointsTable)
-    val joined = pts.hint("merge")
-      .join(spark.table(packedTable), Seq("cell"), "left")
-    finish(bestFromPacked(joined), pts, params, tzByCell)
-  }
-
   /** Materialize the packed cell->candidates index as a cell-bucketed table
-    * (the world-scale layout). One shuffle at build time; zero at query time. */
+    * (the world-scale layout, see Pipeline.worldScaleLayout). One shuffle at
+    * build time; zero at query time. */
   def writePackedBucketed(spark: org.apache.spark.sql.SparkSession,
                           polygons: DataFrame, cellIndex: DataFrame,
                           table: String, path: String, buckets: Int): Unit = {

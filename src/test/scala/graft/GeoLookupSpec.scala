@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -8,7 +9,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Forward, Gazetteer, GeoLookup, Pipeline, Reverse, Tiler}
+import graft.engine.{Checkpoint, Forward, Gazetteer, GeoLookup, Pipeline, Reverse, Tiler}
 import graft.etl.Extract
 import graft.fixtures.{Synth, World}
 import graft.functions.GeoFunctions
@@ -68,7 +69,7 @@ class GeoLookupSpec extends AnyFunSuite {
     pts.map { case (q, lon, lat) => q -> Option(lookup.reverse(lon, lat)).map(_.polygon_id) }.toMap
 
   test("reverse lookup equals bestPolygon on holes, ring vertices and edges, ties, misses, nulls") {
-    val lookup = Pipeline.prepare(idx, polys, cells, cache = false).lookup.value
+    val lookup = Pipeline.prepare(idx, polys, cells).lookup.value
     val scatter = (0 until 3000).map { i =>
       (-160.0 + (i * 37 % 320) + (i % 100) / 100.0, -70.0 + (i * 23 % 140) + (i % 77) / 77.0)
     }
@@ -94,7 +95,7 @@ class GeoLookupSpec extends AnyFunSuite {
   }
 
   test("property: the lookup's best polygon equals bestPolygon on random points") {
-    val lookup = Pipeline.prepare(idx, polys, cells, cache = false).lookup.value
+    val lookup = Pipeline.prepare(idx, polys, cells).lookup.value
     val near = for {
       p <- Gen.oneOf(polyRows)
       u <- Gen.choose(-0.1, 1.1)
@@ -114,7 +115,7 @@ class GeoLookupSpec extends AnyFunSuite {
   }
 
   test("forward and reverse UDFs equal the join form on null norm/lon/lat") {
-    val prep = Pipeline.prepare(idx, polys, cells, cache = false)
+    val prep = Pipeline.prepare(idx, polys, cells)
     val m = Seq[(Long, String, java.lang.Double, java.lang.Double)](
       (1L, "barcelona", null, null), (2L, "schwabing", null, null),
       (3L, "nowhereville", null, null), (4L, null, null, null),
@@ -176,12 +177,22 @@ class GeoLookupSpec extends AnyFunSuite {
     Tiler.assign(fwd.unionByName(rev), cfg.tileZ)
   }
 
+  /** Two fused runs — plain, and checkpointed (cold, then resumed from the
+    * checkpoint) — against each other and against the unfused verbs. */
   private def checkConfig(cfg: Pipeline.Config): Seq[String] = {
     val prep = Pipeline.prepare(idx, polys, cells, cfg)
     try {
       val prepared = Pipeline.geocodePrepared(spark, pages, prep, scanner, cfg)
       val a = rows(prepared)
-      assert(a === rows(Pipeline.geocode(spark, pages, idx, polys, cells, scanner, cfg)))
+      val dir = Files.createTempDirectory("graft-lookup-ckpt").toString
+      Seq("cold", "resume").foreach { runId =>
+        val ckpt = cfg.copy(ckptDir = Some(dir), runId = runId)
+        assert(a === rows(Pipeline.geocodePrepared(spark, pages, prep, scanner, ckpt)), runId)
+      }
+      assert(Checkpoint.metrics(spark, dir).select("stage", "run_id", "resumed").distinct()
+        .as[(String, String, Boolean)].collect().toSet === (for {
+          stage <- Set("mentions", "hits"); (runId, resumed) <- Set(("cold", false), ("resume", true))
+        } yield (stage, runId, resumed)))
       // the fused projection formats forward countries in revParams.language
       // (the verb path in fwdParams.language): compare those rows without it
       def split(rs: DataFrame) =
@@ -221,8 +232,9 @@ class GeoLookupSpec extends AnyFunSuite {
     val prep = Pipeline.prepare(idx, polys, cells)
     val df = Pipeline.geocodePrepared(spark, pages, prep, scanner)
     assert(df.count() > 0)
-    prep.release()
+    // prepare caches nothing: the broadcast is all there is to release
     assert(prep.top1.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    prep.release()
     intercept[Exception](Pipeline.geocodePrepared(spark, pages, prep, scanner).count())
   }
 

@@ -51,7 +51,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("end-to-end geocode: fixture pages resolve forward and reverse") {
     val pages = Synth.pages(spark, 1000, 8).toDF()
-    val hits = Pipeline.geocode(spark, pages, idx, polys, polyCells, scanner).cache()
+    val prep = Pipeline.prepare(idx, polys, polyCells)
+    val hits = Pipeline.geocodePrepared(spark, pages, prep, scanner).cache()
 
     // fixture row 0 mentions Schwabing -> forward hit at the golden point
     val schwabing = hits.filter($"url" === "https://example.org/p/0").collect()
@@ -73,13 +74,15 @@ class PipelineSpec extends AnyFunSuite {
     // volume sanity: a healthy fraction of pages geocode
     assert(hits.select("url").distinct().count() > 200)
     hits.unpersist()
+    prep.release()
   }
 
   test("checkpointed run resumes idempotently with lineage") {
     val dir = Files.createTempDirectory("graft-ckpt").toString
     val pages = Synth.pages(spark, 300, 4).toDF()
-    def run(runId: String) = Pipeline.geocode(spark, pages, idx, polys, polyCells,
-      scanner, Pipeline.Config(ckptDir = Some(dir), runId = runId))
+    val prep = Pipeline.prepare(idx, polys, polyCells)
+    def run(runId: String) = Pipeline.geocodePrepared(spark, pages, prep, scanner,
+      Pipeline.Config(ckptDir = Some(dir), runId = runId))
 
     val first = run("r1").orderBy("url", "surface", "verb").collect()
     val second = run("r2").orderBy("url", "surface", "verb").collect()
@@ -93,19 +96,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(lin.filter($"run_id" === "r1" && $"resumed").count() === 0)
     // per-partition rows recorded
     assert(lin.agg(sum("rows")).as[Long].collect()(0) > 0)
-  }
-
-  test("reverse shuffle-join path (world-scale polygons) matches broadcast path") {
-    val pts = Synth.pages(spark, 400, 4).toDF()
-      .select($"url".as("query_id"))
-      .withColumn("lon", lit(2.1287) + (xxhash64($"query_id") % 1000) / lit(500000.0))
-      .withColumn("lat", lit(41.40139) + (xxhash64($"query_id") % 997) / lit(500000.0))
-    val viaBroadcast = Reverse.reverse(pts, polys, polyCells, broadcastIndex = true)
-      .select("query_id", "polygon_id", "formatted").orderBy("query_id").collect()
-    val viaShuffle = Reverse.reverse(pts, polys, polyCells, broadcastIndex = false)
-      .select("query_id", "polygon_id", "formatted").orderBy("query_id").collect()
-    assert(viaBroadcast.toSeq === viaShuffle.toSeq)
-    assert(viaBroadcast.exists(_.getAs[String]("formatted") != null))
+    prep.release()
   }
 
   test("salted join produces identical results to plain join") {

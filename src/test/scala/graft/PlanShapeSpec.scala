@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine._
+import graft.etl.Extract
 import graft.fixtures.Synth
 import graft.model.ForwardParams
 
@@ -26,15 +27,15 @@ class PlanShapeSpec extends AnyFunSuite {
   lazy val cells = Gazetteer.polygonCellIndex(polys)
 
   test("forward join broadcasts the name index; pages side never shuffles before join") {
-    val p = plan(Forward.geocodePages(spark, Synth.pages(spark, 100, 2).toDF(),
-      idx, Gazetteer.scanner(), ForwardParams(limit = Some(1))))
+    val p = plan(Forward.geocodeMentions(Extract.mentions(spark,
+      Synth.pages(spark, 100, 2).toDF(), Gazetteer.scanner()), idx, ForwardParams(limit = Some(1))))
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin"), "big side must not sort-merge")
   }
 
   test("top-1 path is a hash aggregate (max_by), not a sort window") {
-    val p = plan(Forward.geocodePages(spark, Synth.pages(spark, 100, 2).toDF(),
-      idx, Gazetteer.scanner(), ForwardParams(limit = Some(1))))
+    val p = plan(Forward.geocodeMentions(Extract.mentions(spark,
+      Synth.pages(spark, 100, 2).toDF(), Gazetteer.scanner()), idx, ForwardParams(limit = Some(1))))
     assert(!p.contains("Window"), s"limit=1 must not use a window:\n$p")
     assert(p.contains("max_by") || p.contains("HashAggregate"), p)
   }

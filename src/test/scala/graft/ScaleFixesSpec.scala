@@ -9,7 +9,8 @@ import graft.engine.{Checkpoint, Gazetteer, Pipeline, Salt}
 import graft.fixtures.{Synth, World}
 
 /** Scale-path hygiene: sampled hot-key histogram, stale-resume fingerprint
-  * guard, world-scale packed-table reuse, density-derived kNN start ring. */
+  * guard, world-scale packed-table reuse and runId check, density-derived
+  * kNN start ring. */
 class ScaleFixesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -86,6 +87,21 @@ class ScaleFixesSpec extends AnyFunSuite {
     assert(packedFiles() === before)
     spark.sql(s"DROP TABLE IF EXISTS $m1")
     spark.sql(s"DROP TABLE IF EXISTS $p1")
+  }
+
+  test("worldScaleLayout fails loudly on a runId that cannot name a table") {
+    val wh = Files.createTempDirectory("graft-ws-runid").toString
+    val gazRows = World.gazetteer()
+    val polys = Gazetteer.polygonsDF(spark, World.polygons())
+    val cells = Gazetteer.polygonCellIndex(polys)
+    val pages = Synth.pages(spark, 20, 2).toDF()
+    val e = intercept[IllegalArgumentException](Pipeline.worldScaleLayout(spark, pages,
+      polys, cells, Gazetteer.scanner(gazRows), wh, buckets = 4,
+      Pipeline.Config(runId = "run-2")))
+    assert(e.getMessage.contains("letters, digits and '_'") && e.getMessage.contains("run-2"),
+      e.getMessage)
+    // nothing was written before the check
+    assert(new java.io.File(wh).list().isEmpty)
   }
 
   test("sampled hotKeys plan reads the big side through a Sample node (no full pre-scan)") {

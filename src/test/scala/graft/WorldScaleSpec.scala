@@ -1,18 +1,20 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Gazetteer, Pipeline, Reverse}
 import graft.fixtures.{Synth, World}
 import graft.geo.Geo
-import graft.model.ReverseParams
+import graft.model.{Page, ReverseParams}
 
 /** World-polygon-scale reverse path: multi-ring (holed) and concave
   * geometries through the ray-caster, and the cell-bucketed zero-exchange
-  * SMJ flagship variant, asserted equal to the broadcast path. */
+  * SMJ flagship path, asserted equal to the broadcast path. */
 class WorldScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -69,77 +71,56 @@ class WorldScaleSpec extends AnyFunSuite {
 
   // ---- flagship world-scale variant -------------------------------------------
 
-  test("geocodeWorldScale: zero-exchange bucketed SMJ, equal to broadcast path") {
+  test("worldScaleLayout + geocodeWorldScaleRead == geocodePrepared, full rows") {
     val wh = Files.createTempDirectory("graft-ws").toString
     val gazRows = World.gazetteer()
     val idx = Gazetteer.nameIndex(Gazetteer.gazetteerDF(spark, gazRows))
     val polys = Gazetteer.polygonsDF(spark, World.polygons(filler = 60))
     val cells = Gazetteer.polygonCellIndex(polys)
     val scanner = Gazetteer.scanner(gazRows)
-    val pages = Synth.pages(spark, 2000, 8).toDF()
+    // coordinate literals in the donut holes of fillers 2 and 5, on their
+    // annuli, and outside every indexed cell
+    val ts = new Timestamp(1767225600000L)
+    val holed = Seq(
+      "hole -23.500, -85.500 annulus -23.500, -85.300 nowhere 89.500, 179.500.",
+      "hole 45.500, 25.500 annulus 45.650, 25.500 near Barcelona.")
+      .zipWithIndex.map { case (t, i) =>
+        Page(s"https://example.org/holed/$i", ts, Array.emptyByteArray, t, "en")
+      }
+    val pages = Synth.pages(spark, 2000, 8).toDF().unionByName(holed.toDS().toDF())
+    val (mentionsTable, packedTable) = Pipeline.worldScaleLayout(spark, pages,
+      polys, cells, scanner, wh, buckets = 8)
 
-    val base = Pipeline.geocode(spark, pages, idx, polys, cells, scanner)
-    val world = Pipeline.geocodeWorldScale(spark, pages, idx, polys, cells,
-      scanner, wh, buckets = 8)
+    def rows(df: DataFrame) =
+      df.select("url", "text_sha256", "surface", "verb", "name", "ref_id", "lon", "lat",
+        "formatted", "tile_z", "tile_x", "tile_y").collect().map(_.toString).sorted.toSeq
 
-    val plan = world.queryExecution.executedPlan.toString
-    assert(plan.contains("SortMergeJoin"), plan.take(4000))
-    // the reverse join key must never shuffle — the bucketed layout is the
-    // exchange; the only Exchange allowed is the tiny broadcast-side top-1
-    // name-index build (keyed by gaz_key)
-    assert(!plan.contains("Exchange hashpartitioning(cell"),
-      s"world-scale reverse join must not shuffle on cell:\n${plan.take(4000)}")
-    assert(plan.contains("Bucketed: true"), plan.take(4000))
+    Seq(Pipeline.Config(), Pipeline.Config(revParams = ReverseParams(language = Some("de"))))
+      .foreach { cfg =>
+        val world = Pipeline.geocodeWorldScaleRead(spark, mentionsTable, packedTable,
+          idx, polys, cells, cfg)
+        val plan = world.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin"), plan.take(4000))
+        // the reverse join key must never shuffle — the bucketed layout is the
+        // exchange; the only Exchange allowed is the tiny broadcast-side top-1
+        // name-index build (keyed by gaz_key)
+        assert(!plan.contains("Exchange hashpartitioning(cell"),
+          s"world-scale reverse join must not shuffle on cell:\n${plan.take(4000)}")
+        assert(plan.contains("Bucketed: true"), plan.take(4000))
 
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("url", "surface", "verb", "ref_id", "tile_x", "tile_y")
-        .collect().map(_.toString).sorted.toSeq
-    assert(key(world) === key(base))
-    assert(world.count() > 0)
+        val prep = Pipeline.prepare(idx, polys, cells, cfg)
+        try assert(rows(world) === rows(Pipeline.geocodePrepared(spark, pages, prep, scanner, cfg)))
+        finally prep.release()
 
-    spark.sql("DROP TABLE IF EXISTS graft_mentions_bucketed_run")
-    spark.sql("DROP TABLE IF EXISTS graft_polycells_bucketed_run")
-  }
+        val holedHits = world.filter(col("url").startsWith("https://example.org/holed/") &&
+            col("verb") === "reverse")
+          .select("surface", "name").as[(String, String)].collect().toMap
+        assert(holedHits === Map(
+          "-23.500, -85.300" -> "Fillerland 2", "45.650, 25.500" -> "Fillerland 5"), cfg)
+        assert(world.filter(col("verb") === "forward").count() > 0)
+      }
 
-  test("geocodePrepared (steady-state indexes) equals geocode exactly") {
-    val gazRows = World.gazetteer()
-    val idx = Gazetteer.nameIndex(Gazetteer.gazetteerDF(spark, gazRows))
-    val polys = Gazetteer.polygonsDF(spark)
-    val cells = Gazetteer.polygonCellIndex(polys)
-    val scanner = Gazetteer.scanner(gazRows)
-    val pages = Synth.pages(spark, 1500, 4).toDF()
-    val prep = Pipeline.prepare(idx, polys, cells)
-    val a = Pipeline.geocode(spark, pages, idx, polys, cells, scanner)
-      .collect().map(_.toString).sorted.toSeq
-    val b = Pipeline.geocodePrepared(spark, pages, prep, scanner)
-      .collect().map(_.toString).sorted.toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
-    prep.release()
-  }
-
-  test("reverseBucketed equals broadcast reverse on holed filler polygons") {
-    val wh = Files.createTempDirectory("graft-rb").toString
-    val polys = Gazetteer.polygonsDF(spark, World.polygons(filler = 30))
-    val cells = Gazetteer.polygonCellIndex(polys)
-    // points scattered over filler territory, including donut holes
-    val pts = spark.range(0, 3000).select(col("id").as("query_id"),
-      ((col("id") * 37 % 320) - 160 + (col("id") % 100) / lit(100.0)).as("lon"),
-      ((col("id") * 23 % 140) - 70 + (col("id") % 77) / lit(77.0)).as("lat"))
-    val base = Reverse.reverse(pts, polys, cells, ReverseParams())
-      .select("query_id", "polygon_id", "geocode_status")
-    Reverse.writePackedBucketed(spark, polys, cells,
-      "graft_rb_packed", s"$wh/packed", 8)
-    spark.sql("DROP TABLE IF EXISTS graft_rb_points")
-    pts.withColumn("cell", graft.functions.GeoFunctions.cellId(col("lon"), col("lat"),
-        lit(graft.geo.CellIndex.FineLevel)))
-      .write.bucketBy(8, "cell").sortBy("cell")
-      .option("path", s"$wh/points").mode("overwrite").saveAsTable("graft_rb_points")
-    val bucketed = Reverse.reverseBucketed(spark, "graft_rb_points", "graft_rb_packed")
-      .select("query_id", "polygon_id", "geocode_status")
-    assert(bucketed.collect().map(_.toString).sorted.toSeq ===
-      base.collect().map(_.toString).sorted.toSeq)
-    spark.sql("DROP TABLE IF EXISTS graft_rb_points")
-    spark.sql("DROP TABLE IF EXISTS graft_rb_packed")
+    spark.sql(s"DROP TABLE IF EXISTS $mentionsTable")
+    spark.sql(s"DROP TABLE IF EXISTS $packedTable")
   }
 }
