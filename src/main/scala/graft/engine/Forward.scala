@@ -107,23 +107,34 @@ object Forward {
     case _ => (lon, lat)
   }
 
+  /** A gazetteer row's place name and country name in `lang` (lower case),
+    * falling back to the default names. */
+  private def localized(lang: Option[String]): (Column, Column) = (
+    lang.map(l => coalesce(element_at(col("altnames"), l), col("name")))
+      .getOrElse(col("name")),
+    Format.countryNameCol(col("country_code"), lang))
+
+  /** OpenCage's `formatted` string of a gazetteer row, with the place and
+    * country named in `language` when given. Shared by `project` and the
+    * pipeline's forward top-1 index, so fused and verb rows format alike. */
+  def formatted(language: Option[String]): Column = {
+    val (locName, country) = localized(language.map(lc))
+    Format.opencageFormatted(locName, col("house_number"), col("road"),
+      col("postcode"), col("city"), country)
+  }
+
   /** Full result projection shared by the query-verb, page-pipeline and
     * streaming paths. `tzByCell` feeds the timezone annotation when the
     * caller's gazetteer carries per-place zones (empty = country-level). */
   def project(df: DataFrame, params: ForwardParams,
               tzByCell: Map[Long, String] = Map.empty): DataFrame = {
-    val lang = params.language.map(lc)
-    val locName = lang.map(l => coalesce(element_at(col("altnames"), l), col("name")))
-      .getOrElse(col("name"))
-    val country = Format.countryNameCol(col("country_code"), lang)
+    val (locName, country) = localized(params.language.map(lc))
     val (x, y) = projectCrs(col("lon"), col("lat"), params.sr)
     var out = df
       .withColumn("display_name", Format.osmDisplayName(locName, col("house_number"),
         col("road"), col("suburb"), col("city"), col("admin2"), col("admin1"),
         lit(null), col("postcode"), country))
-      .withColumn("formatted", Format.opencageFormatted(locName, col("house_number"),
-        col("road"), col("postcode"),
-        lang.map(l => col("city")).getOrElse(col("city")), country))
+      .withColumn("formatted", formatted(params.language))
       .withColumn("label", Format.geoAdminLabel(locName, col("postcode"), col("city")))
       // OpenCage's open-world `components` map (opencage.rs:571; the tests
       // index it by key, opencage.rs:800) — every result carries it

@@ -19,8 +19,9 @@ import graft.model.{AdminPolygon, GazetteerRow}
  * only (gaz_key, place_id, rank columns, lon/lat), not altnames/addresses.
  * Full rows are joined back by place_id after top-k, so the broadcast payload
  * stays minimal. Polygon rings can exceed broadcast budget at world scale:
- * the cell->polygon index is therefore a separate table that can shuffle-join
- * on `cell` (see Reverse.broadcastPolygons flag).
+ * the cell->polygon index is therefore a separate table, which the bucketed
+ * layout (Pipeline.worldScaleLayout + geocodeWorldScaleRead) joins on `cell`
+ * without broadcasting it.
  */
 object Gazetteer {
 

@@ -11,8 +11,7 @@ import graft.geo.{CellIndex, Geo}
   * fused pipeline projection. */
 case class ForwardHit(g_place_id: java.lang.Long, g_name: String,
                       g_lon: java.lang.Double, g_lat: java.lang.Double,
-                      g_cc: String, g_city: String, g_road: String,
-                      g_house: String, g_postcode: String)
+                      g_formatted: String)
 
 /** The polygon a point resolves to: the fields the fused pipeline formats. */
 case class ReverseHit(polygon_id: Long, name: String,
@@ -82,8 +81,7 @@ object GeoLookup {
     top1.filter(col("gaz_key").isNotNull)
       .select(col("gaz_key"), struct(col("g_place_id").cast("long").as("g_place_id"),
         col("g_name"), col("g_lon").cast("double").as("g_lon"),
-        col("g_lat").cast("double").as("g_lat"), col("g_cc"), col("g_city"),
-        col("g_road"), col("g_house"), col("g_postcode")))
+        col("g_lat").cast("double").as("g_lat"), col("g_formatted")))
       .as(Encoders.tuple(Encoders.STRING, Encoders.product[ForwardHit]))
       .collect().foreach { case (k, h) => names.put(k, h) }
 

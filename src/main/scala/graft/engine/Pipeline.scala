@@ -85,9 +85,7 @@ object Pipeline {
     Forward.top1Index(nameIndex, cfg.fwdParams)
       .select(col("gaz_key"), col("place_id").as("g_place_id"),
         col("name").as("g_name"), col("lon").as("g_lon"), col("lat").as("g_lat"),
-        col("country_code").as("g_cc"), col("city").as("g_city"),
-        col("road").as("g_road"), col("house_number").as("g_house"),
-        col("postcode").as("g_postcode"))
+        Forward.formatted(cfg.fwdParams.language).as("g_formatted"))
 
   /** Geocoded hits, one row per resolved (url, mention): verb='forward'
     * rows resolve name mentions to gazetteer places, verb='reverse' rows
@@ -215,10 +213,11 @@ object Pipeline {
 
   /** The fused single-pass projection shared by the broadcast and bucketed
     * paths, over mentions that carry their forward top-1 place as `g_*`
-    * columns and their best polygon as the `__rev` struct. */
+    * columns (`g_formatted` formatted once per place, in
+    * `cfg.fwdParams.language`, when the top-1 index is built) and their best
+    * polygon as the `__rev` struct. */
   private def fuseHits(joined: DataFrame, cfg: Config): DataFrame = {
       val lang = cfg.revParams.language.map(_.toLowerCase(java.util.Locale.ROOT))
-      val fwdCountry = Format.countryNameCol(col("g_cc"), lang)
 
       def rv(f: String) = col("__rev").getField(f)
       val revCity = lang.map(l => coalesce(element_at(rv("loc_city"), l), rv("fmt_city")))
@@ -239,9 +238,7 @@ object Pipeline {
           .otherwise(col("lon")))
         .withColumn("lat", when(col("verb") === "forward", col("g_lat"))
           .otherwise(col("lat")))
-        .withColumn("formatted", when(col("verb") === "forward",
-          Format.opencageFormatted(col("g_name"), col("g_house"), col("g_road"),
-            col("g_postcode"), col("g_city"), fwdCountry))
+        .withColumn("formatted", when(col("verb") === "forward", col("g_formatted"))
           .otherwise(
             when(rv("fmt_road").isNotNull, concat_ws(", ",
               rv("fmt_road"), rv("fmt_house"),

@@ -3,10 +3,9 @@ package graft.etl
 import java.util.regex.Pattern
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GeoFunctions
 import graft.model.Mention
 
 /** Text normalization shared by extraction and the forward join key:
@@ -359,13 +358,6 @@ object Extract {
     }
   }
 
-  /** Column UDF over a broadcast scanner. UDF (not codegen Expression) is the
-    * right tool here: variable-length Array[Struct] output with a broadcast
-    * dictionary closure — the per-row regex/trie work dominates, not SerDe. */
-  def mentionsUdf(bc: Broadcast[DictScanner]): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) =>
-      if (text == null) Array.empty[Mention] else extractAll(text, bc.value))
-
   // one broadcast per scanner instance per JVM — repeated pipeline runs must
   // not re-serialize/re-ship the dictionary
   private val bcCache =
@@ -387,29 +379,18 @@ object Extract {
    * Column-pruned scan: only url/warc_ts/lang/text are read (never html).
    */
   def mentions(spark: SparkSession, pages: DataFrame, scanner: DictScanner): DataFrame = {
-    if (sys.env.contains("GRAFT_EXTRACT_UDF")) {
-      val ex = mentionsUdf(broadcastOnce(spark, scanner))(col("text"))
-      pages
-        .select(col("url"), col("warc_ts"), col("lang"),
-          GeoFunctions.sha256Hex(col("text")).as("text_sha256"),
-          explode(ex).as("m"))
-        .select(col("url"), col("warc_ts"), col("lang"), col("text_sha256"),
-          col("m.kind").as("kind"), col("m.surface").as("surface"),
-          col("m.norm").as("norm"), col("m.lon").as("lon"), col("m.lat").as("lat"))
-    } else {
-      // native expression: sha + mentions from one pass over the page text
-      val ex = org.apache.spark.sql.GraftBridge.column(
-        graft.functions.ExtractMentionsExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("text")),
-          broadcastOnce(spark, scanner)))
-      pages
-        .select(col("url"), col("warc_ts"), col("lang"), ex.as("x"))
-        .select(col("url"), col("warc_ts"), col("lang"),
-          col("x.text_sha256").as("text_sha256"),
-          explode(col("x.mentions")).as("m"))
-        .select(col("url"), col("warc_ts"), col("lang"), col("text_sha256"),
-          col("m.kind").as("kind"), col("m.surface").as("surface"),
-          col("m.norm").as("norm"), col("m.lon").as("lon"), col("m.lat").as("lat"))
-    }
+    // native expression: sha + mentions from one pass over the page text
+    val ex = org.apache.spark.sql.GraftBridge.column(
+      graft.functions.ExtractMentionsExpr(
+        org.apache.spark.sql.GraftBridge.expression(col("text")),
+        broadcastOnce(spark, scanner)))
+    pages
+      .select(col("url"), col("warc_ts"), col("lang"), ex.as("x"))
+      .select(col("url"), col("warc_ts"), col("lang"),
+        col("x.text_sha256").as("text_sha256"),
+        explode(col("x.mentions")).as("m"))
+      .select(col("url"), col("warc_ts"), col("lang"), col("text_sha256"),
+        col("m.kind").as("kind"), col("m.surface").as("surface"),
+        col("m.norm").as("norm"), col("m.lon").as("lon"), col("m.lat").as("lat"))
   }
 }

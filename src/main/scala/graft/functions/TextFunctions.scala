@@ -194,7 +194,7 @@ object TextFunctions {
 
   /** First 60 bits of sha256(s) as a Long — THE portable cross-engine hash:
     * DuckDB recomputes it as a base-16 fold over the hex digest
-    * (SparkEntry.sha60Sql). Every portable-oracle path (sketch families,
+    * (contract.ContractFixtures.sha60Sql). Every portable-oracle path (sketch families,
     * lineage checksums) must route through this single definition. */
   def sha60(s: Column): Column =
     org.apache.spark.sql.functions.conv(

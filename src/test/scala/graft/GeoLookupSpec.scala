@@ -193,13 +193,7 @@ class GeoLookupSpec extends AnyFunSuite {
         .as[(String, String, Boolean)].collect().toSet === (for {
           stage <- Set("mentions", "hits"); (runId, resumed) <- Set(("cold", false), ("resume", true))
         } yield (stage, runId, resumed)))
-      // the fused projection formats forward countries in revParams.language
-      // (the verb path in fwdParams.language): compare those rows without it
-      def split(rs: DataFrame) =
-        if (cfg.revParams.language.isEmpty) rows(rs)
-        else rows(rs.filter(col("verb") === "reverse")) ++
-          rows(rs.filter(col("verb") === "forward").withColumn("formatted", lit(null)))
-      assert(split(prepared) === split(unfused(cfg)))
+      assert(a === rows(unfused(cfg)))
       assert(a.nonEmpty)
       a
     } finally prep.release()
@@ -225,6 +219,16 @@ class GeoLookupSpec extends AnyFunSuite {
 
   test("geocodePrepared == geocode == unfused verbs with revParams.language = de") {
     val a = checkConfig(Pipeline.Config(revParams = ReverseParams(language = Some("de"))))
+    assert(a.exists(r => r.contains(",reverse,") && r.contains("München")))
+    // forward rows format in fwdParams.language, which is unset here
+    assert(!a.exists(r => r.contains(",forward,") && r.contains("Deutschland")))
+  }
+
+  test("geocodePrepared == geocode == unfused verbs with fwdParams and revParams language = de") {
+    val a = checkConfig(Pipeline.Config(
+      fwdParams = ForwardParams(limit = Some(1), language = Some("de")),
+      revParams = ReverseParams(language = Some("de"))))
+    assert(a.exists(r => r.contains(",forward,") && r.contains("Deutschland")))
     assert(a.exists(r => r.contains(",reverse,") && r.contains("München")))
   }
 
